@@ -19,6 +19,7 @@ import os
 import shutil
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if ROOT not in sys.path:
@@ -34,15 +35,17 @@ DRIVER_MEM_CAP_MB = 4096
 
 class Context:
     """What a workload gets: the session, its seed and window, a private
-    run directory, the tracer, and the measured-phase marks."""
+    run directory, the tracer, the inputs its ``prepare`` made, and the
+    measured-phase marks."""
 
-    def __init__(self, args, run_dir: str, spark, tracer) -> None:
+    def __init__(self, args, run_dir: str, spark, tracer, inputs=None) -> None:
         self.seed = args.seed
         self.seconds = args.seconds
         self.trace = bool(args.trace)
         self.run_dir = run_dir
         self.spark = spark
         self.tracer = tracer
+        self.inputs = inputs
         self.setup_s: float | None = None
 
     def path(self, *parts: str) -> str:
@@ -136,13 +139,17 @@ def main(argv) -> int:
 
     module = importlib.import_module(f"perfbench.workloads.{args.workload}")
     spark = sampler = None
+    # a workload's Spark-free input staging runs while the JVM starts
+    pool = ThreadPoolExecutor(1)
+    prepare = getattr(module, "prepare", None)
+    staged = pool.submit(prepare, args.seed, run_dir) if prepare else None
     try:
         t0 = time.perf_counter()
         spark = start_session(args, run_dir)
         session_start_s = time.perf_counter() - t0
         sampler = probes.RssSampler([os.getpid(), probes.jvm_pid(spark)]).start()
         tracer = Tracer(spark.sparkContext if args.trace else None, enabled=bool(args.trace))
-        ctx = Context(args, run_dir, spark, tracer)
+        ctx = Context(args, run_dir, spark, tracer, staged.result() if staged else None)
         result = module.run(ctx)
         peak_rss = sampler.stop()
         steal = probes.steal_share(cpu_before, probes.cpu_times())
@@ -156,6 +163,7 @@ def main(argv) -> int:
             fold = fold_trace(result, tracer.spans, os.path.join(run_dir, "eventlog"))
             module.layer_metrics(result, tracer.spans, fold)
     finally:
+        pool.shutdown()
         if sampler is not None:
             sampler.stop()
         if spark is not None:

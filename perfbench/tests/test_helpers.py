@@ -214,15 +214,22 @@ def test_freshness_joins_send_instants_to_poll_observations():
     assert missing == ["k3"]
 
 
-def test_schedule_is_seeded_and_expected_keys_skip_page_logs():
-    s1 = live_dau.build_schedule(7, 4, rate=10, burst=20, lead_in=1)
-    s2 = live_dau.build_schedule(7, 4, rate=10, burst=20, lead_in=1)
+def test_schedule_is_seeded_and_expected_keys_skip_page_logs_and_expired():
+    s1 = live_dau.build_schedule(7, 20, rate=10, burst=20)
+    s2 = live_dau.build_schedule(7, 20, rate=10, burst=20)
     assert s1 == s2
-    assert s1["phases"].count("lead_in") == 10
-    assert s1["phases"].count("steady") == 40 and s1["phases"].count("burst") == 20
+    assert s1["phases"][:20] == ["burst"] * 20
+    assert s1["phases"].count("steady") == 200
     bodies = [json.loads(b) for _, b in s1["schedule"]]
+    gone = [b for b in bodies if live_dau.expired(b)]
+    assert gone  # some events are stamped behind the watermark
     keys = live_dau.expected_keys(bodies)
     assert keys == {
-        (live_dau.dt_of(b["ts"]), b["common"]["mid"]) for b in bodies if "start" in b
+        (live_dau.dt_of(b["ts"]), b["common"]["mid"])
+        for b in bodies if "start" in b and b not in gone
     }
-    assert len({dt for dt, _ in keys}) == 2  # the event clock crosses midnight
+    assert not any(live_dau.expired(b) for b in s1["warm"])
+    steady = live_dau.expected_keys(bodies[20:])
+    assert len({dt for dt, _ in steady}) == 2  # the event clock crosses midnight
+    burst_days = {dt for dt, _ in live_dau.expected_keys(bodies[:20])}
+    assert burst_days == {live_dau.dt_of(s1["warm"][0]["ts"])}  # not a window day

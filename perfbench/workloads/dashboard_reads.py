@@ -1,16 +1,26 @@
 """dashboard_reads: what dashboard users wait on — a closed loop of two
-clients calling the ``serving`` endpoints over sf0.1-sized tables.
+clients calling the ``serving`` endpoints over sf0.1-sized tables, with
+two of the registry's report queries (``dau_hourly``, ``top_customers``)
+in the mix as the dashboard's report panels.  The order write path that
+feeds the dashboards runs in the same session (``order_cdc.CdcPipeline``:
+bronze commits, ``DeltaJoinPropagator`` into OrderWide, the gold rollup):
+its bronze landing and initial full propagate and rollup beside the
+readers' warm-up, then one timed CDC cycle after the reads' window: the
+first incremental one, with a retention delete.
 
-Every call plans afresh and loads its tables through ``load_table``, so the
-workload is driver- and plan-bound: small bounded scans, many short jobs.
-It bypasses the streaming and manifest layers.  Each response must equal,
-as parsed JSON, an answer DuckDB computed once during set-up.
+Every read plans afresh and loads its tables through ``load_table``, so
+the reads are driver- and plan-bound: small bounded scans, many short
+jobs.  Each serving response must equal, as parsed JSON, an answer DuckDB
+computed once during set-up; each report's rows must hash-match its
+registry DuckDB oracle; the writer's silver and gold tables must equal
+DuckDB over the net bronze state.
 """
 
 from __future__ import annotations
 
 import itertools
 import json
+import statistics
 import threading
 import time
 from datetime import date, timedelta
@@ -30,13 +40,16 @@ KEYWORDS = ("Customer#0000001", "Customer#00000042 Customer#00000077")
 #: followed at once by the next page through ``after`` (``paged_next``).
 BLOCK = (
     "realtime_total", "realtime_hour", "paged_shallow",
+    "realtime_total", "realtime_hour", "dau_hourly",
     "realtime_total", "realtime_hour", "paged_deep",
     "realtime_total", "realtime_hour", "map_order_data",
     "realtime_total", "realtime_hour", "paged_keyword",
+    "realtime_total", "realtime_hour", "top_customers",
     "realtime_total", "realtime_hour", "stat_groups",
-    "realtime_total", "realtime_hour", "paged_shallow",
 )
-KINDS = tuple(dict.fromkeys(BLOCK)) + ("paged_next",)
+#: registry queries in the mix; the rest of the kinds are serving calls
+REPORTS = ("dau_hourly", "top_customers")
+KINDS = tuple(k for k in dict.fromkeys(BLOCK) if k not in REPORTS) + ("paged_next",)
 TABLES = ("orders", "customer", "nation", "events")
 MAX_REQUESTS = 300  # per client; far more than one window completes
 
@@ -64,10 +77,13 @@ def request_stream(seed: int, client: int, days: list[str]):
 
 
 class Oracle:
-    """DuckDB answers to every request the mix can make, as parsed JSON."""
+    """DuckDB answers to every request the mix can make: parsed JSON for a
+    serving call, the frame hash of the registry oracle's rows for a
+    report."""
 
-    def __init__(self, con) -> None:
+    def __init__(self, con, reports: dict) -> None:
         self.con = con
+        self.reports = reports
         self._cache: dict = {}
 
     def answer(self, kind: str, p: dict):
@@ -82,7 +98,11 @@ class Oracle:
             FROM events WHERE CAST(ts AS DATE) = DATE '{d}' GROUP BY user_id"""
 
     def _compute(self, kind: str, p: dict):
+        from perfbench.oracle import frame_hash
+
         q = self.con.execute
+        if kind in REPORTS:
+            return frame_hash(q(self.reports[kind]).fetchdf())
         if kind == "realtime_total":
             (n,) = q(f"SELECT count(*) FROM ({self._dau(p['date'])})").fetchone()
             return [
@@ -149,9 +169,13 @@ class Oracle:
         return {"draw": 1, "total": total, "rows": out, "last_key": last}
 
 
-def call(spark, sf_dir: str, kind: str, p: dict, after=None) -> str:
+def call(spark, sf_dir: str, kind: str, p: dict, after=None, queries=None):
+    """One request; a serving call's JSON body, or a report's rows as a
+    pandas frame."""
     from gmallrealtime02_spark import serving
 
+    if kind in REPORTS:
+        return queries[kind].fn(spark, sf_dir).toPandas()
     if kind == "realtime_total":
         return serving.realtime_total(spark, sf_dir, p["date"])
     if kind == "realtime_hour":
@@ -169,30 +193,89 @@ def call(spark, sf_dir: str, kind: str, p: dict, after=None) -> str:
     raise ValueError(kind)
 
 
-def run(ctx):
+#: the untimed warm-up: each request kind once; the two clients share it
+WARM_UP = (
+    ("realtime_total", {"date": 0}),
+    ("realtime_hour", {"date": 1}),
+    ("paged_shallow", {"page": 1}),
+    ("paged_deep", {"page": DEEP_PAGE}),
+    ("paged_keyword", {"page": 1, "keyword": KEYWORDS[0]}),
+    ("map_order_data", {}),
+    ("stat_groups", {}),
+    ("dau_hourly", {}),
+    ("top_customers", {}),
+)
+
+
+def warm_up_requests(days: list[str]) -> list[list[tuple[str, dict]]]:
+    """The warm-up as groups a client plays in order: a shallow page
+    with the next page through ``after``, every other kind alone."""
+    out = []
+    for kind, p in WARM_UP:
+        if "date" in p:
+            p = {"date": days[p["date"]]}
+        out.append([(kind, p)])
+        if kind == "paged_shallow":
+            out[-1].append(("paged_next", {"page": 2}))
+    return out
+
+
+def prepare(seed: int, run_dir: str) -> dict:
+    """Spark-free set-up: the tables, every client's requests, and the
+    DuckDB answer to each of them."""
+    import os
+
+    from gmallrealtime02_spark.plans.registry import load_all
     from perfbench import datagen
     from perfbench.oracle import duck_over
+    from perfbench.workloads import order_cdc
+
+    tables = datagen.make_tables(seed, SCALE)
+    sf_dir = datagen.write_tables({k: tables[k] for k in TABLES}, os.path.join(run_dir, "sf"))
+    days = datagen.event_day_dates()
+    queries = load_all()
+    oracle = Oracle(duck_over(sf_dir, TABLES), {k: queries[k].oracle for k in REPORTS})
+    # each client's requests, more than a window can complete
+    streams = [
+        list(itertools.islice(request_stream(seed, c, days), MAX_REQUESTS))
+        for c in range(CLIENTS)
+    ]
+    warm = warm_up_requests(days)
+    for kind, p in itertools.chain(*warm, *streams):
+        oracle.answer(kind, p)
+    return {"sf_dir": sf_dir, "queries": queries, "oracle": oracle,
+            "streams": streams, "warm": warm, "cdc": order_cdc.prepare(seed, run_dir)}
+
+
+def run(ctx):
     from perfbench.report import Result
+    from perfbench.workloads.order_cdc import CdcPipeline, record_cycles
 
     spark, tr = ctx.spark, ctx.tracer
     res = Result()
-    tables = datagen.make_tables(ctx.seed, SCALE)
-    sf_dir = datagen.write_tables({k: tables[k] for k in TABLES}, ctx.path("sf"))
-    days = datagen.event_day_dates()
-    oracle = Oracle(duck_over(sf_dir, TABLES))
+    inp = ctx.inputs
+    cdc = CdcPipeline(spark, tr, inp["cdc"], ctx.path("cdc"), ctx.seed)
+    res.stash["cdc"] = cdc
+    sf_dir, queries, oracle, streams = inp["sf_dir"], inp["queries"], inp["oracle"], inp["streams"]
     lock = threading.Lock()
     samples: list[tuple[str, float]] = []
     mismatches: list[str] = []
 
     measure_span = None
 
-    def one(kind: str, p: dict, after, rid: str, record: bool):
-        with tr.span(f"serve.{kind}", "serving", request=rid, parent=measure_span):
+    def one(kind: str, p: dict, after, rid: str, record: bool, parent=None):
+        layer = "plans" if kind in REPORTS else "serving"
+        with tr.span(f"{layer}.{kind}", layer, request=rid, parent=parent or measure_span):
             t0 = time.perf_counter()
-            body = call(spark, sf_dir, kind, p, after)
+            resp = call(spark, sf_dir, kind, p, after, queries)
             dt = time.perf_counter() - t0
-        got = json.loads(body)
-        ok = got == oracle.answer(kind, p)
+        if kind in REPORTS:
+            from perfbench.oracle import frame_hash
+
+            got, ok = None, frame_hash(resp) == oracle.answer(kind, p)
+        else:
+            got = json.loads(resp)
+            ok = got == oracle.answer(kind, p)
         if record:
             with lock:
                 samples.append((kind, dt))
@@ -202,27 +285,33 @@ def run(ctx):
             raise RuntimeError(f"warm-up answer differs: {kind} {p}")
         return got
 
-    # untimed warm-up: each request kind once, in plan order
-    for kind, p in (
-        ("realtime_total", {"date": days[0]}),
-        ("realtime_hour", {"date": days[1]}),
-        ("paged_shallow", {"page": 1}),
-        ("paged_deep", {"page": DEEP_PAGE}),
-        ("paged_keyword", {"page": 1, "keyword": KEYWORDS[0]}),
-        ("map_order_data", {}),
-        ("stat_groups", {}),
-    ):
-        got = one(kind, p, None, "warm", record=False)
-        if kind == "paged_shallow":
-            one("paged_next", {"page": 2}, got["last_key"], "warm", record=False)
-    # each client's requests, and every answer they need, before the clock
-    # starts (more requests than a window can complete)
-    streams = [
-        list(itertools.islice(request_stream(ctx.seed, c, days), MAX_REQUESTS))
-        for c in range(CLIENTS)
-    ]
-    for kind, p in itertools.chain.from_iterable(streams):
-        oracle.answer(kind, p)
+    def warm_client(c: int, errors: list) -> None:
+        """Client ``c``'s share of the untimed warm-up."""
+        last = None
+        try:
+            with tr.span(f"warm-up {c}", "bench") as span:
+                for kind, p in itertools.chain(*inp["warm"][c::CLIENTS]):
+                    after = last["last_key"] if kind == "paged_next" else None
+                    last = one(kind, p, after, f"warm{c}", record=False, parent=span)
+        except Exception as exc:
+            errors.append(exc)
+
+    def writer_set_up(errors: list) -> None:
+        try:
+            cdc.prime()
+        except Exception as exc:
+            errors.append(exc)
+
+    # untimed: the readers' warm-up beside the writer's set-up
+    errors: list = []
+    threads = [threading.Thread(target=warm_client, args=(c, errors)) for c in range(CLIENTS)]
+    threads.append(threading.Thread(target=writer_set_up, args=(errors,)))
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
 
     def client(c: int, deadline: float, errors: list) -> None:
         last = None
@@ -238,7 +327,7 @@ def run(ctx):
             errors.append(repr(exc))
 
     ctx.begin_measure()
-    errors: list = []
+    errors = []
     with tr.span("measure", "bench") as measure_span:
         t_start = time.monotonic()
         deadline = t_start + ctx.seconds
@@ -248,39 +337,57 @@ def run(ctx):
         for t in threads:
             t.join()
         wall = time.monotonic() - t_start
-    res.attempted = len(samples) + len(errors)
+    # the writer's cycle follows, so the reads run alone
+    with tr.span("measure", "bench"):
+        write_s, delete = cdc.cycle()
+    mismatches += cdc.check()
+    # the reads, the cycle and the writer's two table checks
+    res.attempted = len(samples) + 1 + 2 + len(errors)
     res.failed = len(mismatches) + len(errors)
     res.mismatches = mismatches + errors
-    lat_ms = [dt * 1e3 for _, dt in samples]
-    res.timing("serve", "ms", lat_ms)
-    res.e2e["serve_rps"] = (len(samples) / wall, "req/s", len(samples))
-    res.e2e["latency_p50_ms"] = res.e2e["serve_p50_ms"]
-    res.e2e["throughput_per_s"] = res.e2e["serve_rps"]
+    record_cycles(res, [] if delete else [write_s], [write_s] if delete else [])
+    res.timing("serve", "ms", [dt * 1e3 for k, dt in samples if k not in REPORTS])
+    res.timing("report", "ms", [dt * 1e3 for k, dt in samples if k in REPORTS])
+    served = sum(k not in REPORTS for k, _ in samples)
+    res.e2e["serve_rps"] = (served / wall, "req/s", served)
+    all_ms = [dt * 1e3 for _, dt in samples]
+    res.e2e["latency_p50_ms"] = (statistics.median(all_ms), "ms", len(all_ms))
+    res.e2e["throughput_per_s"] = (len(samples) / wall, "req/s", len(samples))
     res.stash["samples"] = samples
     return res
 
 
 def layer_metrics(res, spans, fold) -> None:
-    """serving: per-kind latency, and Spark work per request."""
+    """serving and plans: per-kind latency, and Spark work per request;
+    the writer's layers as ``order_cdc`` reports them."""
     from perfbench.report import measured_spans
     from perfbench.stats import summarize
     from perfbench.tracing import driver_seconds
+    from perfbench.workloads.order_cdc import cdc_layer_metrics
+
+    cdc_layer_metrics(res.layers, res.stash["cdc"], spans, fold)
 
     by_kind: dict = {}
     for kind, dt in res.stash["samples"]:
         by_kind.setdefault(kind, []).append(dt * 1e3)
-    for kind in KINDS:
-        vals = by_kind.get(kind, [])
-        res.layers[f"serve.{kind}_ms.p50"] = (summarize(vals).get("p50", 0.0), "ms", len(vals))
-    jobs, tasks, driver = [], [], []
-    for s in measured_spans(spans):
-        if s.layer != "serving":
-            continue
-        a = fold.get(s.id)
-        jobs.append(a.jobs if a else 0)
-        tasks.append(a.tasks if a else 0)
-        driver.append(driver_seconds(s.start, s.end, a.task_intervals if a else []) * 1e3)
-    n = len(jobs)
-    res.layers["serve.jobs_per_request.p50"] = (summarize(jobs).get("p50", 0), "count", n)
-    res.layers["serve.tasks_per_request.p50"] = (summarize(tasks).get("p50", 0), "count", n)
-    res.layers["serve.driver_ms_per_request.p50"] = (summarize(driver).get("p50", 0.0), "ms", n)
+    for layer, prefix, kinds, per in (
+        ("serving", "serve", KINDS, "request"), ("plans", "plans", REPORTS, "query"),
+    ):
+        for kind in kinds:
+            vals = by_kind.get(kind)
+            if vals:  # kinds late in the block may not come up in a short window
+                res.layers[f"{prefix}.{kind}_ms.p50"] = (
+                    summarize(vals)["p50"], "ms", len(vals))
+        jobs, tasks, driver = [], [], []
+        for s in measured_spans(spans):
+            if s.layer != layer:
+                continue
+            a = fold.get(s.id)
+            jobs.append(a.jobs if a else 0)
+            tasks.append(a.tasks if a else 0)
+            driver.append(driver_seconds(s.start, s.end, a.task_intervals if a else []) * 1e3)
+        n = len(jobs)
+        res.layers[f"{prefix}.jobs_per_{per}.p50"] = (summarize(jobs).get("p50", 0), "count", n)
+        res.layers[f"{prefix}.tasks_per_{per}.p50"] = (summarize(tasks).get("p50", 0), "count", n)
+        res.layers[f"{prefix}.driver_ms_per_{per}.p50"] = (
+            summarize(driver).get("p50", 0.0), "ms", n)

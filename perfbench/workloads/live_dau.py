@@ -2,14 +2,18 @@
 → the DAU ``ManifestTable`` — the reference's signature path (PAPER §0).
 
 An open-loop generator in its own process POSTs reference-shaped startup
-logs (``common.mid``, ``start``, ``ts``; FIXTURES §1.1) at a fixed rate for
-the measured window; once the job has caught up, it sends one burst (kept
-apart so the burst never delays the window's last rows).  Device ids are skewed, so most events
-repeat an already-active (dt, mid); a small share is stamped minutes late,
-and the event clock crosses midnight mid-window so late events land in the
-previous day.  A benchmark thread polls ``ManifestTable.current_version()``;
-after the run, diffing the versions gives the version (and so the instant)
-at which each (dt, mid) row first became visible.
+logs (``common.mid``, ``start``, ``ts``; FIXTURES §1.1).  Once the job is
+warm it sends one burst and the job drains it; then it sends at a fixed
+rate for the measured window.  Most window events come from devices new
+to the day, spread evenly over it, so freshness is sampled all through it;
+the rest come from a skewed set of devices and mostly repeat an
+already-active (dt, mid).  A small share is stamped minutes
+late, and the event clock crosses midnight mid-window so late events land
+in the previous day; two startup events are stamped days late, behind
+the job's watermark, so the job must drop them.  A benchmark thread polls
+``ManifestTable.current_version()``; after the run, diffing the versions
+gives the version (and so the instant) at which each (dt, mid) row first
+became visible.
 """
 
 from __future__ import annotations
@@ -24,25 +28,29 @@ from datetime import datetime, timezone
 
 import numpy as np
 
-# Open-loop rate, events/s.  20/s keeps the job well under capacity on a
-# shared host: at 40/s, CPU contention pushed some runs past capacity and
-# freshness went bimodal (p50 3.6 s in most runs, 8-10 s in others).
-RATE = 20
-# 1,000 events drain in ~13 s; 3,000 took ~26 s, more than a run can spend.
-BURST = 1000
+# Open-loop rate, events/s.  Each event is one spool file and a trigger's
+# time grows with the files it reads, so a slowdown also makes the next
+# trigger longer; at 10/s that feedback stays small.  At 20/s runs with
+# 5-10% CPU steal had up to 1.8x the freshness of quiet runs, and at 40/s
+# some runs fell behind for good (p50 8-10 s against 3.6 s).
+RATE = 10
+# Sent once the job is warm, before the window: 300 events drain in ~5 s.
+BURST = 300
 TIME_SCALE = 60  # event-time seconds per wall second
 MIDNIGHT_MS = int(datetime(2024, 3, 2, tzinfo=timezone.utc).timestamp() * 1000)
+NEW_SHARE = 0.7  # steady events from a device new to the day
 LATE_SHARE = 0.05
 LATE_MINUTES = (2, 15)
+# Startup events per window stamped this far back: behind the 48 h
+# watermark of the DAU job (which has seen the warm-up's day by then), so
+# the job drops them.
+EXPIRED_EVENTS = 2
+EXPIRED_DAYS = 5
 PAGE_SHARE = 0.1  # events without ``start``: routed away from the DAU job
 STEADY_DEVICES = 300
 BURST_DEVICES = 2000
 WARM_ROUNDS = 2
 WARM_EVENTS = 20
-# Untimed lead-in at the steady rate before the measured window, so the
-# window starts with the job already in its steady trigger cadence rather
-# than idle after the warm-up.
-LEAD_IN_S = 3
 POLL_S = 0.01
 SCHEMA = (
     "common struct<mid:string,uid:string,ar:string,ch:string,vc:string>, "
@@ -77,42 +85,54 @@ def dt_of(ts_ms: int) -> str:
     return datetime.fromtimestamp(ts_ms / 1000, tz=timezone.utc).date().isoformat()
 
 
-def build_schedule(
-    seed: int, seconds: float, rate: int = RATE, burst: int = BURST, lead_in: float = LEAD_IN_S
-) -> dict:
+def build_schedule(seed: int, seconds: float, rate: int = RATE, burst: int = BURST) -> dict:
     """The generator's inputs, all from ``seed``: warm-up bodies, and the
-    lead-in + steady + burst schedule as ``[offset_s, body]`` pairs with a
-    parallel list of phases (burst offsets count from the burst's own
-    start).  The event clock crosses midnight halfway through the steady
-    window."""
+    burst + steady schedule as ``[offset_s, body]`` pairs with a parallel
+    list of phases (each phase's offsets count from its own start).  The
+    event clock crosses midnight halfway through the steady window."""
     rng = np.random.default_rng(seed)
-    t_evt0 = MIDNIGHT_MS - int((lead_in + seconds / 2) * TIME_SCALE * 1000)
+    t_evt0 = MIDNIGHT_MS - int(seconds / 2 * TIME_SCALE * 1000)
     warm = [
         _body(rng, f"warm{i}", t_evt0 - 86_400_000 + i * 1000, True)
         for i in range(WARM_ROUNDS * WARM_EVENTS)
     ]
-    n_lead = int(lead_in * rate)
-    n_steady = n_lead + int(seconds * rate)
-    steady_mids = _zipf_ids(rng, n_steady, STEADY_DEVICES)
     schedule, phases = [], []
+    # the burst lands on the warm-up's day, so the window's commits never
+    # rewrite the files that hold it
+    for m in _zipf_ids(rng, burst, BURST_DEVICES, a=0.8):
+        schedule.append([0.0, json.dumps(_body(rng, f"b{m}", t_evt0 - 86_400_000, True))])
+        phases.append("burst")
+    n_steady = int(seconds * rate)
+    hot = _zipf_ids(rng, n_steady, STEADY_DEVICES)
+    gone = set(np.random.default_rng([seed, 1]).choice(
+        n_steady, min(EXPIRED_EVENTS, n_steady), replace=False).tolist())
     for i in range(n_steady):
         offset = i / rate
         ts = t_evt0 + int(offset * TIME_SCALE * 1000)
         if rng.random() < LATE_SHARE:
             ts -= int(rng.uniform(*LATE_MINUTES) * 60_000)
+        mid = f"n{i}" if rng.random() < NEW_SHARE else f"m{hot[i]}"
         start = rng.random() >= PAGE_SHARE
-        schedule.append([offset, json.dumps(_body(rng, f"m{steady_mids[i]}", ts, start))])
-        phases.append("lead_in" if i < n_lead else "steady")
-    burst_ts = t_evt0 + int(n_steady / rate * TIME_SCALE * 1000)
-    for m in _zipf_ids(rng, burst, BURST_DEVICES, a=0.8):
-        schedule.append([0.0, json.dumps(_body(rng, f"b{m}", burst_ts, True))])
-        phases.append("burst")
+        if i in gone:
+            ts = t_evt0 + int(offset * TIME_SCALE * 1000) - EXPIRED_DAYS * 86_400_000
+            start = True
+        schedule.append([offset, json.dumps(_body(rng, mid, ts, start))])
+        phases.append("steady")
     return {"warm": warm, "schedule": schedule, "phases": phases}
 
 
+def expired(body: dict) -> bool:
+    """Stamped so far back that the DAU job's watermark drops it."""
+    return body["ts"] < MIDNIGHT_MS - (EXPIRED_DAYS - 1) * 86_400_000
+
+
 def expected_keys(bodies: list[dict]) -> set:
-    """(dt, mid) of every startup log — the DAU table's exact contents."""
-    return {(dt_of(b["ts"]), b["common"]["mid"]) for b in bodies if "start" in b}
+    """(dt, mid) of every startup log the job keeps — the DAU table's
+    exact contents."""
+    return {
+        (dt_of(b["ts"]), b["common"]["mid"])
+        for b in bodies if "start" in b and not expired(b)
+    }
 
 
 def first_visible_versions(version_keys: list[tuple[int, set]]) -> dict:
@@ -218,7 +238,6 @@ def run(ctx):
     from gmallrealtime02_spark.streaming.manifest import ManifestTable
     from perfbench import loadgen
     from perfbench.report import Result
-    from perfbench.stats import percentile
 
     tr = ctx.tracer
     res = Result()
@@ -226,13 +245,8 @@ def run(ctx):
     schedule, phases = inputs["schedule"], inputs["phases"]
     bodies = inputs["warm"] + [json.loads(b) for _, b in schedule]
     with open(ctx.path("schedule.json"), "w") as fh:
-        json.dump(
-            [
-                [e for e, p in zip(schedule, phases) if p != "burst"],
-                [e for e, p in zip(schedule, phases) if p == "burst"],
-            ],
-            fh,
-        )
+        json.dump([[e for e, p in zip(schedule, phases) if p == part]
+                   for part in ("burst", "steady")], fh)
     spool, out, ckpt = ctx.path("spool"), ctx.path("dau"), ctx.path("ckpt")
 
     if ctx.trace:
@@ -270,20 +284,15 @@ def run(ctx):
                     raise RuntimeError("warm-up POST failed")
             query.processAllAvailable()
         poller = VersionPoller(ManifestTable(out)).start()
-
-        start_part()
-        time.sleep(LEAD_IN_S + 0.05)
         warm_batches = {p["batchId"] for p in _progress_dicts(query)}
         ctx.begin_measure()
         with tr.span("measure", "bench"):
-            part_sent()
-            with tr.span("processAllAvailable", "streaming.jobs"):
-                query.processAllAvailable()
-            start_part()
-            part_sent()
+            for part in ("burst", "steady"):
+                start_part()
+                part_sent()
+                with tr.span("processAllAvailable", "streaming.jobs", part=part):
+                    query.processAllAvailable()
             gen.wait(timeout=60)
-            with tr.span("processAllAvailable", "streaming.jobs"):
-                query.processAllAvailable()
             time.sleep(3 * POLL_S)
             poller.stop()
         progress = _progress_dicts(query)
@@ -313,6 +322,17 @@ def run(ctx):
     for k in sorted(got - want):
         res.mismatches.append(f"unexpected DAU row {k}")
     res.failed += len(want ^ got)
+    # the days-late events are absent from the table (checked above) and
+    # the job reports drops exactly when some were sent (Spark 4.1 counts
+    # each row dropped by this operator twice, so the count is not compared)
+    n_expired = sum(1 for b in bodies if "start" in b and expired(b))
+    dropped = sum(
+        o.get("numRowsDroppedByWatermark", 0)
+        for p in progress for o in p.get("stateOperators", [])
+    )
+    if (dropped > 0) != (n_expired > 0):
+        res.mismatches.append(f"{dropped} rows dropped by the watermark, {n_expired} sent")
+        res.failed += 1
 
     # freshness: first send of each new (dt, mid) → first visible version
     first_sent: dict = {}
@@ -325,12 +345,12 @@ def run(ctx):
             burst_first_sent = rec["sent"]
         if "start" not in b:
             continue
+        if expired(b):
+            continue
         key = (dt_of(b["ts"]), b["common"]["mid"])
         if key in warm_keys or key in first_sent or key in burst_keys:
             continue
-        if phase == "lead_in":
-            warm_keys.add(key)  # active before the window: not a new row in it
-        elif phase == "burst":
+        if phase == "burst":
             burst_keys.add(key)
         else:
             first_sent[key] = rec["sent"]
@@ -341,8 +361,6 @@ def run(ctx):
     res.mismatches.extend(f"never seen by the poller: {k}" for k in unseen)
     fresh_s = list(fresh.values())
     res.timing("freshness", "s", fresh_s)
-    if len(fresh_s) >= 20:
-        res.e2e["freshness_p95_s"] = (percentile(fresh_s, 95), "s", len(fresh_s))
     res.e2e["latency_p50_ms"] = (res.e2e["freshness_p50_s"][0] * 1e3, "ms", len(fresh_s))
     steady_lat = [x for x, p in zip(acct["latency_ms"], phases) if p == "steady"]
     res.timing("ingest", "ms", steady_lat)

@@ -14,32 +14,29 @@ from __future__ import annotations
 import statistics
 import time
 
+from bench import HEADLINE
+
 SCALE = 0.1
-#: the HEADLINE list of bench.py, copied so the benchmark stands alone
-HEADLINE = (
-    "dau_hourly",
-    "order_wide",
-    "detail_snowflake",
-    "pricing_summary",
-    "revenue_by_nation",
-    "top_customers",
-    "sessionize",
-    "dedup_minhash_lsh",
-    "ann_cosine_topk",
-    "doc_quality",
-)
+
+
+def prepare(seed: int, run_dir: str) -> str:
+    """Spark-free set-up: the tables, as parquet."""
+    import os
+
+    from perfbench import datagen
+
+    return datagen.write_tables(datagen.make_tables(seed, SCALE), os.path.join(run_dir, "sf"))
 
 
 def run(ctx):
     from gmallrealtime02_spark.plans.registry import load_all
     from gmallrealtime02_spark.schemas import TESTDATA_TABLES
-    from perfbench import datagen
     from perfbench.oracle import duck_over, frame_hash
     from perfbench.report import Result
 
     spark, tr = ctx.spark, ctx.tracer
     res = Result()
-    sf_dir = datagen.write_tables(datagen.make_tables(ctx.seed, SCALE), ctx.path("sf"))
+    sf_dir = ctx.inputs
     queries = load_all()
 
     def timed(name: str, label: str) -> float:
