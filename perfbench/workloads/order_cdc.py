@@ -198,9 +198,6 @@ class CdcPipeline:
         self.propagate_modes.clear()
         self.refreshes.clear()
 
-    def can_cycle(self) -> bool:
-        return self.landed_hi + SLICE_ORDERS <= self.n
-
     def cycle(self) -> tuple[float, bool]:
         """Run the next cycle; its wall time and whether it deleted."""
         from pyspark.sql import functions as F
@@ -243,7 +240,7 @@ class CdcPipeline:
         delete cycles' wall times."""
         plain, deletes = [], []
         t_start = time.monotonic()
-        while self.can_cycle():
+        while self.landed_hi + SLICE_ORDERS <= self.n:
             took, delete = self.cycle()
             (deletes if delete else plain).append(took)
             if time.monotonic() - t_start + took > seconds:
