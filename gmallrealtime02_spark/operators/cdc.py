@@ -20,20 +20,13 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..schemas import CANAL_ENVELOPE, MAXWELL_ENVELOPE
+from ..schemas import CANAL_ENVELOPE
 
 
 def parse_canal(raw: DataFrame, value_col: str = "value") -> DataFrame:
     """P1: raw JSON → typed envelope (Canal: data is an ARRAY of rows)."""
     return raw.select(
         F.from_json(F.col(value_col).cast("string"), CANAL_ENVELOPE).alias("env")
-    ).select("env.*")
-
-
-def parse_maxwell(raw: DataFrame, value_col: str = "value") -> DataFrame:
-    """P1: raw JSON → typed envelope (Maxwell: data is a single row)."""
-    return raw.select(
-        F.from_json(F.col(value_col).cast("string"), MAXWELL_ENVELOPE).alias("env")
     ).select("env.*")
 
 

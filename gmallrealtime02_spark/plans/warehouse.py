@@ -1070,7 +1070,7 @@ def order_wide_delete_propagate(spark, sf_dir):
     oracle proves retention deletes no longer recompute the world —
     the round-9 verdict's #1 scale cliff (reference intent: K7 at
     scale, DwsOrderWideApp.scala:129;
-    ``streaming/propagate.py:DeltaJoinPropagator._run_cdc``)."""
+    ``streaming/propagate.py:_Propagation._cdc_step``)."""
     import shutil
     import tempfile
 
@@ -1173,7 +1173,7 @@ def order_wide_dedup_propagate(spark, sf_dir):
     in one atomic ``merge_delta``.  Hash-matching the complement
     ROW_NUMBER oracle proves no key kept a stale winner, lost a
     runner-up, or survived its own deletion
-    (``streaming/propagate.py:_run_cdc_dedup``)."""
+    (``streaming/propagate.py:_Propagation._cdc_step``)."""
     import shutil
     import tempfile
 

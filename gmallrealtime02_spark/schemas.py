@@ -49,17 +49,6 @@ CANAL_ENVELOPE = T.StructType(
     ]
 )
 
-# Maxwell CDC envelope — reference: ods/OdsGmallCanalMax.scala:41-56.  One row
-# per message; ``data`` is a single struct/map.
-MAXWELL_ENVELOPE = T.StructType(
-    [
-        T.StructField("database", T.StringType()),
-        T.StructField("table", T.StringType()),
-        T.StructField("type", T.StringType()),
-        T.StructField("data", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
-
 # ---------------------------------------------------------------------------
 # Fact rows (FIXTURES.md §2) — reference beans OrderInfo.scala / OrderDetail.scala
 # ---------------------------------------------------------------------------

@@ -250,12 +250,7 @@ def _temporal_cols(schema_json) -> set[str]:
 # bloom-indexed table keep the one-job path.  Conservative: a footer
 # read is ~1 ms local / ~10 ms object store, so 32 files stays well
 # under the fixed cost of one Spark job either way.
-try:
-    _FOOTER_STATS_MAX_FILES = int(
-        os.environ.get("SPARK_GRAFT_FOOTER_STATS_MAX", "32")
-    )
-except ValueError:  # malformed env var must not crash module import
-    _FOOTER_STATS_MAX_FILES = 32
+_FOOTER_STATS_MAX_FILES = 32
 
 
 def _pow2_bits(m: int) -> int:

@@ -1,40 +1,64 @@
 """Incremental table-to-table propagation over manifests — the
-bronze→silver layer chaining (Delta's "streaming from a table" idea)
-that completes the table service as a streaming substrate.
+bronze→silver→gold layer chaining (Delta's "streaming from a table"
+idea) that completes the table service as a streaming substrate.
 
-A downstream job over a raw directory must rescan everything per run;
-over a :class:`~.manifest.ManifestTable` the VERSION DIFF enumerates
-exactly the rows added since the last propagated version, so each run
-costs O(new data).  The destination's per-app txn watermark doubles as
-the source-version bookkeeping AND the exactly-once ledger: a replayed
-run (crash after commit, rerun after restart) is declined by the same
-CAS-checked txn rule every manifest sink uses — no separate offset
-store, the Kafka-offset/Redis bookkeeping of the reference collapsed
-into the destination table's own metadata (OffsetManager.scala:14-46).
+One engine, :class:`_Propagation`, keeps a destination equal to
+``combine(A_0, .., A_{n-1})`` over N ≥ 1 :class:`~.manifest.ManifestTable`
+sources, optionally reduced to the keep-best row per key.  The three
+public classes only map their arguments onto it:
+:class:`IncrementalPropagator` (one source, ``combine`` = a row-wise
+transform), :class:`DeltaJoinPropagator` (two sources) and
+:class:`MultiJoinPropagator` (N sources).
 
-``transform`` must be BATCH-LOCAL (row-wise select/filter/explode/
-enrich-against-static): it is applied independently to each version
-diff, so cross-row state would double-count.  Aggregations belong to
-:class:`~.rollup.ContinuousAggregate` (merged partials); joins against
-other STREAMS belong to Structured Streaming jobs (state store).
+``combine`` must be MULTILINEAR — distribute over row-union in each
+argument (inner joins composed with row-wise select/filter/explode
+qualify; aggregations belong to :class:`~.rollup.ContinuousAggregate`).
+Then, with S_i the rows of source i that survive since its last
+propagated version and Δ_i the rows it gained, the telescoping
+delta identity
+
+    combine(A_0'..A_{n-1}') = combine(S_0..S_{n-1})
+        + Σ_i combine(S_0..S_{i-1}, Δ_i, A_{i+1}'..A_{n-1}')
+
+makes each run N delta terms, each with a version-diff-sized argument,
+instead of one full recompute (for N = 2: ΔA⋈B' ∪ S_A⋈ΔB; for N = 1:
+transform(Δ)).
+
+The destination's txn watermarks double as the source-version
+bookkeeping AND the exactly-once ledger: every run lands as ONE atomic
+commit carrying each source's version (``app_id`` for one source,
+``f"{app_id}.s{i}"`` for N ≥ 2), and a replayed run is declined by the
+CAS-checked txn rule every manifest sink uses — the reference's
+Kafka-offset/Redis bookkeeping collapsed into the destination table's
+own metadata (OffsetManager.scala:14-46).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
 from .manifest import ManifestTable
 
+KeySpec = list[str] | dict[str, str]
 
-def _key_pairs(keys) -> list[tuple[str, str]]:
+
+def _key_pairs(keys: KeySpec) -> list[tuple[str, str]]:
     """Normalize a key spec to [(source_col, dest_col)]: a plain list
-    means the transform keeps the key column names; a {source: dest}
-    mapping handles transforms that rename them."""
+    means combine keeps the key column names; a {source: dest}
+    mapping handles combines that rename them."""
     if isinstance(keys, dict):
         return list(keys.items())
     return [(k, k) for k in keys]
+
+
+def _renamed(df: DataFrame, pairs: list[tuple[str, str]]) -> DataFrame:
+    """The ``pairs`` columns of ``df``, each renamed from its first name
+    to its second."""
+    return df.select(*[F.col(a).alias(b) for a, b in pairs])
 
 
 def _best_per_key(df: DataFrame, keys: list[str], order: list[str]) -> DataFrame:
@@ -42,9 +66,6 @@ def _best_per_key(df: DataFrame, keys: list[str], order: list[str]) -> DataFrame
     ``order`` ascending (``first_seen_dedup``'s convention — ordering
     by every varying column makes the survivor a pure function of the
     row multiset, partitioning-invariant)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     w = Window.partitionBy(*keys).orderBy(*[F.col(c).asc() for c in order])
     return (
         df.withColumn("__rn__", F.row_number().over(w))
@@ -53,16 +74,265 @@ def _best_per_key(df: DataFrame, keys: list[str], order: list[str]) -> DataFrame
     )
 
 
-class IncrementalPropagator:
-    """``key_cols`` (optional) unlocks DELETE-AWARE incrementality: the
-    columns that uniquely identify a source row AND survive
-    ``transform`` (a list when names are unchanged, {source: dest}
-    when renamed).  With it set, an upstream ``delete_where``/
-    ``delete_range``/``upsert`` in the version range propagates as a
-    keyed retraction (``merge_delta`` on the destination) instead of
-    the full recompute — at 100 TB a routine bronze retention pass
-    then costs O(files it touched) downstream, not O(silver).
-    compact/replace/restore still take the honest full fallback."""
+class _Propagation:
+    """The propagation engine.  Each :meth:`run_once` takes the first
+    step that applies:
+
+    1. **noop** — no source moved, or one has no commits yet (no schema
+       to combine: the first run waits for every source).
+    2. **append-only** — every source's range holds only appends: the
+       delta terms are appended as they are, or, with keep-best, the
+       in-batch best competes against the STORED winners of exactly the
+       touched keys (keep-min is a semilattice, so best(stored ∪ new)
+       needs no suppressed history) in one keyed ``merge_delta``.
+    3. **row-level CDC** — deletes/upserts in range: S_i is source i at
+       its old version minus its net-deleted keys, Δ_i its net-added
+       rows.  Plain: retract every source's net-deleted keys and insert
+       the delta terms in ONE ``merge_delta``.  Keep-best: a retracted
+       row may have been a winner with live runners-up, so the AFFECTED
+       keys — named directly by the owning source's deletes, the stored
+       winners other sources' deletes produced, and every key with a new
+       candidate — are re-derived from a combine whose owning source is
+       filtered to them.
+    4. **full** — a compact/replace/restore in range, history below the
+       vacuum horizon, or a first run: recompute, PINNED to the captured
+       versions (an unpinned read racing a concurrent source append
+       would include rows beyond the recorded watermarks — duplicated
+       next run), committed as a ``replace``.
+
+    **The CDC key rule.**  Step 3 needs a provenance key for EVERY
+    source: ``keys[i]`` names the columns that uniquely identify a row
+    of source i and survive ``combine`` (a list, or {source: dest} when
+    renamed); the dedup-owning source defaults to ``dedup_keys``.  A
+    source without one sends non-append ranges to step 4, as does a
+    keep-best destination in which another source's key columns are
+    invisible or whose ``dedup_keys`` are absent from the owning
+    source's deleted rows.
+
+    **Keep-best.**  ``dedup_keys`` + ``dedup_order`` make the
+    destination the first row per ``dedup_keys`` group ordered by
+    ``dedup_order`` ascending; ``combine`` itself stays multilinear —
+    the engine owns the dedup, which is what makes it incremental.
+    ``dedup_side`` indexes the source that OWNS the keys (each output
+    key value is carried by one row of it); ``dedup_keys`` is read
+    against that source as a {source: dest} spec."""
+
+    def __init__(
+        self,
+        sources: list[ManifestTable],
+        dest: ManifestTable,
+        combine: Callable[..., DataFrame],
+        app_id: str,
+        keys: list[KeySpec | None],
+        dedup_keys: KeySpec | None,
+        dedup_order: list[str] | None,
+        dedup_side: int,
+    ) -> None:
+        n = len(sources)
+        if len(keys) != n:
+            raise ValueError("one key spec per source")
+        if (dedup_keys is None) != (dedup_order is None):
+            raise ValueError("dedup_keys and dedup_order go together")
+        if dedup_keys is not None:
+            if not dedup_keys or not dedup_order:
+                raise ValueError(
+                    "dedup_keys and dedup_order must be non-empty"
+                )
+            if not 0 <= dedup_side < n:
+                raise ValueError("dedup_side must index a source")
+        self.sources = list(sources)
+        self.dest = dest
+        self.combine = combine
+        self.dedup = None if dedup_keys is None else _key_pairs(dedup_keys)
+        self.dedup_cols = [d for _, d in self.dedup or []]
+        self.dedup_order = None if dedup_order is None else list(dedup_order)
+        self.dedup_side = dedup_side
+        self.keys = [
+            _key_pairs(k) if k is not None
+            else self.dedup if i == dedup_side else None
+            for i, k in enumerate(keys)
+        ]
+        self.txn_apps = (
+            [app_id] if n == 1 else [f"{app_id}.s{i}" for i in range(n)]
+        )
+
+    def _best(self, df: DataFrame) -> DataFrame:
+        if self.dedup is None:
+            return df
+        return _best_per_key(df, self.dedup_cols, self.dedup_order)
+
+    def _read(self, spark, versions, idx) -> list[DataFrame]:
+        return [self.sources[i].read(spark, version=versions[i]) for i in idx]
+
+    def _delta_terms(self, before, deltas, after) -> DataFrame:
+        """Σ_i combine(before_0..before_{i-1}, Δ_i, after_{i+1}..):
+        ``before`` holds sources 0..n-2, ``after`` sources 1..n-1."""
+        return reduce(
+            DataFrame.unionByName,
+            (
+                self.combine(*before[:i], d, *after[i:])
+                for i, d in enumerate(deltas)
+            ),
+        )
+
+    def reflected_versions(self) -> tuple[int, ...]:
+        """Source versions already propagated (0 = none)."""
+        txn = self.dest.manifest().get("txn", {})
+        return tuple(int(txn.get(a, 0)) for a in self.txn_apps)
+
+    def run_once(self, spark: SparkSession) -> dict:
+        """Propagate everything the sources changed since the last run.
+        Returns {"mode": "noop" | "incremental" | "full", "versions":
+        [...]} (plus "source_version" for one source), flagged
+        "retractions" when step 3 ran and "dedup" when keep-best ran
+        incrementally.  Every commit path is declined idempotently on
+        replay."""
+        olds = self.reflected_versions()
+        news = tuple(s.current_version() for s in self.sources)
+        meta = {"versions": list(news)}
+        if len(news) == 1:
+            meta["source_version"] = news[0]
+        if news == olds or 0 in news:
+            return {"mode": "noop", **meta}
+        txn = list(zip(self.txn_apps, news))
+        res = None
+        if all(olds):
+            res = self._append_step(spark, olds, news, txn) or self._cdc_step(
+                spark, olds, news, txn
+            )
+        if res is not None:
+            return {**res, **meta}
+        out = self._best(
+            self.combine(*self._read(spark, news, range(len(news))))
+        )
+        self.dest.replace(out, txn=txn)
+        return {"mode": "full", **meta}
+
+    def _append_step(self, spark, olds, news, txn) -> dict | None:
+        n = len(self.sources)
+        deltas = [
+            s.read_appended(spark, lo, hi)
+            for s, lo, hi in zip(self.sources, olds, news)
+        ]
+        if any(d is None for d in deltas):
+            return None
+        delta = self._delta_terms(
+            self._read(spark, olds, range(n - 1)),
+            deltas,
+            self._read(spark, news, range(1, n)),
+        )
+        if self.dedup is None:
+            self.dest.append(delta, txn=txn)
+            return {"mode": "incremental"}
+        dk = self.dedup_cols
+        # cand feeds BOTH the touched-key set and the refreshed winners
+        # merge_delta computes — persist it so the delta terms and the
+        # in-batch best run once, not once per consumer
+        cand = self._best(delta).persist()
+        try:
+            touched = cand.select(*dk).dropDuplicates(dk)
+            stored = self.dest.read(spark).join(touched, dk, "left_semi")
+            refreshed = self._best(stored.unionByName(cand))
+            self.dest.merge_delta(spark, refreshed, [(dk, touched)], txn=txn)
+        finally:
+            cand.unpersist()
+        return {"mode": "incremental", "dedup": True}
+
+    def _cdc_step(self, spark, olds, news, txn) -> dict | None:
+        """Step 3; None (→ full) when the key rule or a source's net
+        diff declines.  Retracting keys(∇_i) leaves combine(S_0..S_{n-1})
+        in the destination, and the delta terms over (S, Δ, A') add the
+        rest.  A key deleted and re-added with different content nets
+        into BOTH ∇ and Δ: its old output rows retract, its new row
+        lands once."""
+        if any(k is None for k in self.keys):
+            return None
+        changes = [
+            s.read_changes(spark, lo, hi)
+            for s, lo, hi in zip(self.sources, olds, news)
+        ]
+        if any(ch is None for ch in changes):
+            return None
+        adds = [a for a, _ in changes]
+        dels = [d for _, d in changes]
+        n = len(self.sources)
+        side = self.dedup_side
+        others = [i for i in range(n) if i != side]
+        if self.dedup is not None:
+            if not {s for s, _ in self.dedup} <= set(dels[side].columns):
+                return None  # dedup keys not named on the owning source
+            dest_now = self.dest.read(spark) if others else None
+            if any(
+                not {d for _, d in self.keys[i]} <= set(dest_now.columns)
+                for i in others
+            ):
+                return None  # another source's provenance invisible in dest
+        before = []
+        for i in range(n - 1):
+            src = [s for s, _ in self.keys[i]]
+            before.append(
+                self.sources[i]
+                .read(spark, version=olds[i])
+                .join(
+                    dels[i].select(*src).dropDuplicates(src), src, "left_anti"
+                )
+            )
+        inserts = self._delta_terms(
+            before, adds, self._read(spark, news, range(1, n))
+        )
+        if self.dedup is None:
+            deletes = [
+                ([d for _, d in p], _renamed(dels[i], p))
+                for i, p in enumerate(self.keys)
+            ]
+            self.dest.merge_delta(spark, inserts, deletes, txn=txn)
+            return {"mode": "incremental", "retractions": True}
+        dk = self.dedup_cols
+        affected = [_renamed(dels[side], self.dedup)]
+        for i in others:
+            ik = [d for _, d in self.keys[i]]
+            affected.append(
+                dest_now.join(
+                    _renamed(dels[i], self.keys[i]).dropDuplicates(ik),
+                    ik,
+                    "left_semi",
+                ).select(*dk)
+            )
+        # affected feeds BOTH the retraction key set and the
+        # re-derivation semi-join — persist so the delta terms behind
+        # it compute once
+        affected = (
+            reduce(DataFrame.unionByName, [*affected, inserts.select(*dk)])
+            .dropDuplicates(dk)
+            .persist()
+        )
+        try:
+            args = self._read(spark, news, range(n))
+            args[side] = args[side].join(
+                _renamed(affected, [(d, s) for s, d in self.dedup]),
+                [s for s, _ in self.dedup],
+                "left_semi",
+            )
+            refreshed = self._best(self.combine(*args))
+            self.dest.merge_delta(spark, refreshed, [(dk, affected)], txn=txn)
+        finally:
+            affected.unpersist()
+        return {"mode": "incremental", "retractions": True, "dedup": True}
+
+
+class IncrementalPropagator(_Propagation):
+    """One source: the destination is ``transform(source)``, which must
+    be BATCH-LOCAL (row-wise select/filter/explode/enrich-against-
+    static) — it is applied to each version diff on its own.
+
+    ``key_cols`` (the source's provenance key, see the engine's key
+    rule) makes an upstream ``delete_where``/``delete_range``/``upsert``
+    propagate as a keyed retraction instead of a full recompute — a
+    routine bronze retention pass then costs O(files it touched)
+    downstream, not O(silver).  ``dedup_keys`` + ``dedup_order`` make
+    the destination the keep-best row per key of transform(source);
+    ``dedup_keys`` is the {source: dest} spec (a list when transform
+    keeps the names) and needs no ``key_cols``."""
 
     def __init__(
         self,
@@ -70,204 +340,34 @@ class IncrementalPropagator:
         dest: ManifestTable,
         transform: Callable[[DataFrame], DataFrame],
         app_id: str = "propagate",
-        key_cols: list[str] | dict[str, str] | None = None,
-        dedup_keys: list[str] | dict[str, str] | None = None,
+        key_cols: KeySpec | None = None,
+        dedup_keys: KeySpec | None = None,
         dedup_order: list[str] | None = None,
     ) -> None:
-        """``dedup_keys`` + ``dedup_order`` (round 11, the single-
-        source form of the keep-best family): the destination becomes
-        the deterministic first-row-per-key over transform(source),
-        ordered by ``dedup_order`` ascending.  ``dedup_keys`` is the
-        {source: dest} spec (list when transform keeps the names);
-        the key must survive ``transform``.  Append ranges compete
-        the in-batch best against the stored winners of the touched
-        keys; delete/upsert ranges re-derive the affected keys from
-        the source filtered to them — suppressed runners-up resurrect
-        when a winner's row dies, keys vanish with their last row."""
-        self.source = source
-        self.dest = dest
-        self.transform = transform
-        self.app_id = app_id
-        self.key_cols = key_cols
-        if (dedup_keys is None) != (dedup_order is None):
-            raise ValueError("dedup_keys and dedup_order go together")
-        self.dedup_pairs = (
-            _key_pairs(dedup_keys) if dedup_keys is not None else None
+        super().__init__(
+            [source], dest, transform, app_id, [key_cols],
+            dedup_keys, dedup_order, 0,
         )
-        self.dedup_keys = (
-            [d for _, d in self.dedup_pairs]
-            if self.dedup_pairs is not None
-            else None
-        )
-        self.dedup_order = list(dedup_order) if dedup_order else None
-
-    def _best(self, df: DataFrame) -> DataFrame:
-        if self.dedup_keys is None:
-            return df
-        return _best_per_key(df, self.dedup_keys, self.dedup_order)
 
     def reflected_version(self) -> int:
         """Highest source version already propagated (0 = nothing)."""
-        return int(self.dest.manifest().get("txn", {}).get(self.app_id, 0))
-
-    def run_once(self, spark: SparkSession) -> dict:
-        """Propagate everything the source added since the last run.
-        Returns {"mode": "noop" | "incremental" | "full",
-        "source_version": N, "rows" | None}.
-
-        Incremental: transform(version-diff rows) appended as ONE atomic
-        commit carrying ``txn=(app_id, source_version)``.  Any
-        non-append source step in the range (compact rewrote the file
-        set — row-preserving but diff-less; replace/delete changed
-        history) falls back to a FULL recompute committed as a replace
-        under the same txn ledger — honest, never a silent double-count
-        or a lingering deleted row.  Either path declined idempotently
-        on replay."""
-        now = self.source.current_version()
-        since = self.reflected_version()
-        if now == since:
-            return {"mode": "noop", "source_version": now}
-        diff = (
-            self.source.read_appended(spark, since, now) if since else None
-        )
-        if since and diff is not None:
-            out = self.transform(diff)
-            if self.dedup_keys is None:
-                self.dest.append(out, txn=(self.app_id, now))
-                return {"mode": "incremental", "source_version": now}
-            # cand feeds BOTH the touched-key set and the refreshed
-            # winners merge_delta computes — persist it so the best()
-            # window over the batch runs once, not once per consumer
-            cand = self._best(out).persist()
-            try:
-                touched = cand.select(*self.dedup_keys).dropDuplicates(
-                    self.dedup_keys
-                )
-                stored = self.dest.read(spark).join(
-                    touched, self.dedup_keys, "left_semi"
-                )
-                refreshed = self._best(stored.unionByName(cand))
-                self.dest.merge_delta(
-                    spark,
-                    refreshed,
-                    [(self.dedup_keys, touched)],
-                    txn=(self.app_id, now),
-                )
-            finally:
-                cand.unpersist()
-            return {
-                "mode": "incremental",
-                "dedup": True,
-                "source_version": now,
-            }
-        if since and self.dedup_keys is not None:
-            ch = self.source.read_changes(spark, since, now)
-            if ch is not None and {
-                s for s, _ in self.dedup_pairs
-            } <= set(ch[1].columns):
-                from pyspark.sql import functions as F
-
-                net_add, net_del = ch
-                dp = self.dedup_pairs
-                # affected feeds BOTH the retraction key set and (via
-                # src_keys) the re-derivation semi-join inside refreshed
-                # — persist so the net-change derivation runs once
-                affected = (
-                    net_del.select(*[F.col(s).alias(d) for s, d in dp])
-                    .unionByName(
-                        self.transform(net_add).select(*self.dedup_keys)
-                    )
-                    .dropDuplicates(self.dedup_keys)
-                    .persist()
-                )
-                try:
-                    src_keys = affected.select(
-                        *[F.col(d).alias(s) for s, d in dp]
-                    )
-                    refreshed = self._best(
-                        self.transform(
-                            self.source.read(spark, version=now).join(
-                                src_keys, [s for s, _ in dp], "left_semi"
-                            )
-                        )
-                    )
-                    self.dest.merge_delta(
-                        spark,
-                        refreshed,
-                        [(self.dedup_keys, affected)],
-                        txn=(self.app_id, now),
-                    )
-                finally:
-                    affected.unpersist()
-                return {
-                    "mode": "incremental",
-                    "retractions": True,
-                    "dedup": True,
-                    "source_version": now,
-                }
-        if since and self.key_cols is not None and self.dedup_keys is None:
-            # append-only diff unavailable — try row-level CDC: net
-            # added rows propagate as transformed inserts, net deleted
-            # rows as keyed retractions, ONE atomic dest commit
-            ch = self.source.read_changes(spark, since, now)
-            if ch is not None:
-                from pyspark.sql import functions as F
-
-                net_add, net_del = ch
-                pairs = _key_pairs(self.key_cols)
-                del_keys = net_del.select(
-                    *[F.col(s).alias(d) for s, d in pairs]
-                ).dropDuplicates([d for _, d in pairs])
-                self.dest.merge_delta(
-                    spark,
-                    self.transform(net_add),
-                    [([d for _, d in pairs], del_keys)],
-                    txn=(self.app_id, now),
-                )
-                return {
-                    "mode": "incremental",
-                    "retractions": True,
-                    "source_version": now,
-                }
-        # pin the full recompute to the CAPTURED version: an unpinned
-        # read racing a concurrent source append would include rows
-        # beyond `now` while recording txn=now — the next incremental
-        # run would then re-append them (duplicates)
-        out = self._best(
-            self.transform(self.source.read(spark, version=now))
-        )
-        self.dest.replace(out, txn=(self.app_id, now))
-        return {"mode": "full", "source_version": now}
+        return self.reflected_versions()[0]
 
 
-class DeltaJoinPropagator:
-    """Incremental propagation for a destination DERIVED FROM TWO
-    manifest sources — the medallion fan-in shape (order_wide: two
-    bronze streams joined into one silver fact) that a single-source
-    :class:`IncrementalPropagator` had to full-recompute every run.
+class DeltaJoinPropagator(_Propagation):
+    """Two sources — the medallion fan-in shape (order_wide: two bronze
+    streams joined into one silver fact).  ``combine(left_df,
+    right_df)`` must be bilinear; each run is ΔA⋈B' ∪ S_A⋈ΔB, where
+    reading "old A" is a time-travel read available while the vacuum
+    horizon retains it.
 
-    ``combine(left_df, right_df) -> DataFrame`` must be BILINEAR:
-    distribute over row-union in each argument independently —
-    combine(A1 ∪ A2, B) = combine(A1, B) ∪ combine(A2, B) and
-    symmetrically.  Inner joins composed with row-wise projections/
-    filters qualify; aggregations and cross-batch dedup do not (they
-    belong to ContinuousAggregate / the streaming state store).  Under
-    bilinearity the classic delta-join identity makes each run
-    O(new data ⋈ other side):
-
-        A'⋈B'  =  A⋈B  ∪  ΔA⋈B'  ∪  A⋈ΔB
-
-    (ΔA joins the NEW right side so (ΔA, ΔB) pairs land exactly once;
-    old A joins only ΔB).  Reading "old A" is a TIME-TRAVEL read of the
-    left source at its last-propagated version — available while the
-    vacuum horizon retains it; a non-append commit in either source's
-    range, or history below the horizon, falls back to an honest full
-    recompute committed as a replace.
-
-    Exactly-once: both source watermarks ride ONE atomic destination
-    commit as a txn pair list ([(app.left, va), (app.right, vb)]); a
-    replayed run (both pairs at-or-below) is declined by the same
-    CAS-checked rule every manifest sink uses."""
+    ``left_keys``/``right_keys`` are the sources' provenance keys (see
+    the engine's key rule): with them a deletion upstream retracts
+    exactly the destination rows that source row produced.
+    ``dedup_keys`` + ``dedup_order`` make the destination the keep-best
+    row per key; ``dedup_side`` ("left" or "right") names the source
+    that owns those keys (order_wide's detail id lives in the lineitem
+    side)."""
 
     def __init__(
         self,
@@ -276,337 +376,25 @@ class DeltaJoinPropagator:
         dest: ManifestTable,
         combine: Callable[[DataFrame, DataFrame], DataFrame],
         app_id: str = "propagate2",
-        left_keys: list[str] | dict[str, str] | None = None,
-        right_keys: list[str] | dict[str, str] | None = None,
-        dedup_keys: list[str] | dict[str, str] | None = None,
+        left_keys: KeySpec | None = None,
+        right_keys: KeySpec | None = None,
+        dedup_keys: KeySpec | None = None,
         dedup_order: list[str] | None = None,
         dedup_side: str = "right",
     ) -> None:
-        """``left_keys``/``right_keys`` (optional, both required to
-        take effect) unlock DELETE-AWARE incrementality: the columns
-        that uniquely identify a left/right source row and survive
-        ``combine`` into the destination (list when names are
-        unchanged, {source: dest} when combine renames).  A deletion
-        upstream then retracts exactly the destination rows that
-        source row produced (unique key ⇒ per-output-row provenance),
-        via the extended delta-join identity
-
-            A'⋈B' = (A−∇A)⋈(B−∇B)  ∪  ΔA⋈B'  ∪  (A−∇A)⋈ΔB
-
-        applied as ONE atomic ``merge_delta`` (retract keys(∇A) and
-        keys(∇B), insert the two delta joins).
-
-        ``dedup_keys`` + ``dedup_order`` (round 11 — the
-        NON-BILINEAR combine path) declare that the destination is
-        the deterministic keep-best over combine's rows:
-        dest = first row per ``dedup_keys`` group ordered by
-        ``dedup_order`` ascending (``first_seen_dedup``'s convention).
-        ``combine`` itself must stay bilinear — the PROPAGATOR owns
-        the dedup, which is what makes it incrementalizable: keep-min
-        is a semilattice, so best(stored ∪ new-candidates) needs only
-        the stored winner per key, never the suppressed history.
-        Append-only ranges then run as: delta-join candidates →
-        in-batch best → compete against the stored winners of exactly
-        the touched keys (one keyed ``merge_delta``).  Delete ranges
-        re-derive exactly the AFFECTED keys (winners whose provenance
-        was retracted + keys with new candidates) from a combine whose
-        ``dedup_side`` source is filtered to those keys.
-        ``dedup_side`` names the source that OWNS the dedup keys
-        (each output key value is carried by one row of that side —
-        order_wide's detail id lives in the lineitem side), and
-        ``dedup_keys`` accepts the same {source: dest} spec as the
-        provenance keys, read against that source (a plain list when
-        the names survive unchanged)."""
-        self.left = left
-        self.right = right
-        self.dest = dest
-        self.combine = combine
-        self.app_id = app_id
-        self.left_keys = left_keys
-        self.right_keys = right_keys
-        if (dedup_keys is None) != (dedup_order is None):
-            raise ValueError("dedup_keys and dedup_order go together")
         if dedup_side not in ("left", "right"):
             raise ValueError("dedup_side must be 'left' or 'right'")
-        self.dedup_pairs = (
-            _key_pairs(dedup_keys) if dedup_keys is not None else None
-        )
-        self.dedup_keys = (
-            [d for _, d in self.dedup_pairs]
-            if self.dedup_pairs is not None
-            else None
-        )
-        self.dedup_order = list(dedup_order) if dedup_order else None
-        self.dedup_side = dedup_side
-
-    def _best(self, df: DataFrame) -> DataFrame:
-        if self.dedup_keys is None:
-            return df
-        return _best_per_key(df, self.dedup_keys, self.dedup_order)
-
-    def reflected_versions(self) -> tuple[int, int]:
-        """(left, right) source versions already propagated (0 = none)."""
-        txn = self.dest.manifest().get("txn", {})
-        return (
-            int(txn.get(f"{self.app_id}.left", 0)),
-            int(txn.get(f"{self.app_id}.right", 0)),
+        super().__init__(
+            [left, right], dest, combine, app_id, [left_keys, right_keys],
+            dedup_keys, dedup_order, ("left", "right").index(dedup_side),
         )
 
-    def run_once(self, spark: SparkSession) -> dict:
-        """Propagate everything either source added since the last run.
-        Returns {"mode": "noop" | "incremental" | "full",
-        "left_version": N, "right_version": M}."""
-        la, lb = self.reflected_versions()
-        na = self.left.current_version()
-        nb = self.right.current_version()
-        out_meta = {"left_version": na, "right_version": nb}
-        if (na, nb) == (la, lb) or na == 0 or nb == 0:
-            # nothing new, or one source has no commits yet (no schema
-            # to join against — the first run waits for both sides)
-            return {"mode": "noop", **out_meta}
-        txns = [
-            (f"{self.app_id}.left", na),
-            (f"{self.app_id}.right", nb),
-        ]
-        if la and lb:
-            d_left = self.left.read_appended(spark, la, na)
-            d_right = self.right.read_appended(spark, lb, nb)
-            if d_left is not None and d_right is not None:
-                # ΔA ⋈ B_new covers (ΔA, old B) and (ΔA, ΔB);
-                # A_old ⋈ ΔB covers the rest — no pair twice
-                right_new = self.right.read(spark, version=nb)
-                left_old = self.left.read(spark, version=la)
-                delta = self.combine(d_left, right_new).unionByName(
-                    self.combine(left_old, d_right)
-                )
-                if self.dedup_keys is None:
-                    self.dest.append(delta, txn=txns)
-                    return {"mode": "incremental", **out_meta}
-                # keep-best dedup: new candidates compete against the
-                # STORED winners of exactly the touched keys —
-                # best(stored ∪ new) == best(all-history ∪ new)
-                # because keep-min is a semilattice.  cand (the delta
-                # joins + in-batch best) feeds BOTH the touched-key set
-                # and the refreshed winners — persist so the fact-join
-                # delta computes once, not once per consumer
-                cand = self._best(delta).persist()
-                try:
-                    touched = cand.select(*self.dedup_keys).dropDuplicates(
-                        self.dedup_keys
-                    )
-                    stored = self.dest.read(spark).join(
-                        touched, self.dedup_keys, "left_semi"
-                    )
-                    refreshed = self._best(stored.unionByName(cand))
-                    self.dest.merge_delta(
-                        spark,
-                        refreshed,
-                        [(self.dedup_keys, touched)],
-                        txn=txns,
-                    )
-                finally:
-                    cand.unpersist()
-                return {"mode": "incremental", "dedup": True, **out_meta}
-            if self.left_keys is not None and self.right_keys is not None:
-                res = self._run_cdc(spark, la, lb, na, nb, txns)
-                if res is not None:
-                    return {**res, **out_meta}
-        # initial run, non-append history, or below the vacuum horizon:
-        # full recompute PINNED to the captured versions (an unpinned
-        # read racing a concurrent source append would include rows
-        # beyond the recorded watermarks — duplicated next run)
-        out = self._best(
-            self.combine(
-                self.left.read(spark, version=na),
-                self.right.read(spark, version=nb),
-            )
-        )
-        self.dest.replace(out, txn=txns)
-        return {"mode": "full", **out_meta}
 
-    def _run_cdc(self, spark, la, lb, na, nb, txns) -> dict | None:
-        """Delete-aware incremental step via row-level CDC on both
-        sources; None when either side's net diff is unusable (the
-        caller then full-recomputes).  Derivation (all multisets, join
-        rows partitioned by their originating source rows):
-
-            dest holds A⋈B; retracting keys(∇A) and keys(∇B) leaves
-            (A−∇A)⋈(B−∇B); adding ΔA⋈B' and (A−∇A)⋈ΔB gives
-            (A−∇A)⋈(B−∇B+ΔB) + ΔA⋈B' = (A−∇A+ΔA)⋈B' = A'⋈B'.
-
-        A key deleted and re-added with different content nets into
-        BOTH ∇ and Δ: its old output rows retract, its new row joins
-        B' exactly once via the ΔA term."""
-        from pyspark.sql import functions as F
-
-        chl = self.left.read_changes(spark, la, na)
-        chr_ = self.right.read_changes(spark, lb, nb)
-        if chl is None or chr_ is None:
-            return None
-        if self.dedup_keys is not None:
-            return self._run_cdc_dedup(spark, chl, chr_, la, na, nb, txns)
-        add_l, del_l = chl
-        add_r, del_r = chr_
-        lp = _key_pairs(self.left_keys)
-        rp = _key_pairs(self.right_keys)
-        # old-surviving left = A at its propagated version minus the
-        # net-deleted left keys (time-travel read + keyed anti-join)
-        left_old = self.left.read(spark, version=la).join(
-            del_l.select(*[s for s, _ in lp]).dropDuplicates(
-                [s for s, _ in lp]
-            ),
-            [s for s, _ in lp],
-            "left_anti",
-        )
-        right_new = self.right.read(spark, version=nb)
-        inserts = self.combine(add_l, right_new).unionByName(
-            self.combine(left_old, add_r)
-        )
-        deletes = [
-            (
-                [d for _, d in lp],
-                del_l.select(*[F.col(s).alias(d) for s, d in lp]),
-            ),
-            (
-                [d for _, d in rp],
-                del_r.select(*[F.col(s).alias(d) for s, d in rp]),
-            ),
-        ]
-        self.dest.merge_delta(spark, inserts, deletes, txn=txns)
-        return {"mode": "incremental", "retractions": True}
-
-    def _run_cdc_dedup(
-        self, spark, chl, chr_, la, na, nb, txns
-    ) -> dict | None:
-        """Delete-aware incremental step when the destination is a
-        keep-best dedup over the combine.  A retracted provenance row
-        may have been a key's WINNER with suppressed runners-up still
-        live, so keys cannot simply lose rows — the AFFECTED keys are
-        RE-DERIVED from the current state and swapped in atomically.
-
-        Affected keys come from three places: (1) dedup-side deletes
-        name their keys DIRECTLY (the ``dedup_keys`` {source: dest}
-        spec reads them off the raw deleted rows); (2) other-side
-        deletes mark the stored winners they produced (dest semi-join
-        on that side's surviving provenance columns); (3) the linear
-        identity's delta-join terms name every key with NEW
-        candidates.  Re-derivation combines the ``dedup_side`` source
-        FILTERED to the affected keys (each output key is owned by one
-        row of that side) against the other side in full, then
-        keep-best.  One atomic ``merge_delta``: retract affected keys,
-        insert their re-derived winners — keys whose candidates all
-        died simply vanish.  O(affected keys' candidate rows), never
-        O(dest).  None (→ honest full fallback) when the other side's
-        provenance columns are invisible in the destination or the
-        dedup key spec names columns absent from the dedup-side
-        source."""
-        from pyspark.sql import functions as F
-
-        add_l, del_l = chl
-        add_r, del_r = chr_
-        lp = _key_pairs(self.left_keys)
-        rp = _key_pairs(self.right_keys)
-        dp = self.dedup_pairs
-        side_del = del_r if self.dedup_side == "right" else del_l
-        other_pairs = lp if self.dedup_side == "right" else rp
-        other_del = del_l if self.dedup_side == "right" else del_r
-        dest_cur = self.dest.read(spark)
-        if not {d for _, d in other_pairs} <= set(dest_cur.columns):
-            return None  # other-side provenance invisible in dest
-        if not {s for s, _ in dp} <= set(side_del.columns):
-            return None  # dedup keys not named on the dedup-side source
-        # (1) dedup-side deletes name their keys directly
-        aff_side = side_del.select(*[F.col(s).alias(d) for s, d in dp])
-        # (2) other-side deletes: the stored winners they produced
-        odel_keys = other_del.select(
-            *[F.col(s).alias(d) for s, d in other_pairs]
-        ).dropDuplicates([d for _, d in other_pairs])
-        aff_other = dest_cur.join(
-            odel_keys, [d for _, d in other_pairs], "left_semi"
-        ).select(*self.dedup_keys)
-        # (3) keys with NEW candidates: the delta-join terms
-        left_surv = self.left.read(spark, version=la).join(
-            del_l.select(*[s for s, _ in lp]).dropDuplicates(
-                [s for s, _ in lp]
-            ),
-            [s for s, _ in lp],
-            "left_anti",
-        )
-        right_new = self.right.read(spark, version=nb)
-        cand = self.combine(add_l, right_new).unionByName(
-            self.combine(left_surv, add_r)
-        )
-        # affected feeds BOTH the retraction key set and (via src_keys)
-        # the re-derivation semi-join inside refreshed — persist so the
-        # delta-join candidate derivation behind it computes once
-        affected = (
-            aff_side.unionByName(aff_other)
-            .unionByName(cand.select(*self.dedup_keys))
-            .dropDuplicates(self.dedup_keys)
-            .persist()
-        )
-        try:
-            src_keys = affected.select(
-                *[F.col(d).alias(s) for s, d in dp]
-            )
-            join_cols = [s for s, _ in dp]
-            if self.dedup_side == "right":
-                refreshed = self._best(
-                    self.combine(
-                        self.left.read(spark, version=na),
-                        self.right.read(spark, version=nb).join(
-                            src_keys, join_cols, "left_semi"
-                        ),
-                    )
-                )
-            else:
-                refreshed = self._best(
-                    self.combine(
-                        self.left.read(spark, version=na).join(
-                            src_keys, join_cols, "left_semi"
-                        ),
-                        self.right.read(spark, version=nb),
-                    )
-                )
-            self.dest.merge_delta(
-                spark, refreshed, [(self.dedup_keys, affected)], txn=txns
-            )
-        finally:
-            affected.unpersist()
-        return {"mode": "incremental", "retractions": True, "dedup": True}
-
-
-class MultiJoinPropagator:
-    """Incremental propagation for a destination derived from N ≥ 2
-    manifest sources — the generalization the round-9 verdict listed
-    as unwritten (missing-gap 5: "a gold table joining three-plus
-    bronzes re-derives pairwise or falls back to full recompute").
-
-    ``combine(dfs: list[DataFrame]) -> DataFrame`` must be
-    MULTILINEAR: distribute over row-union in each argument
-    independently (inner joins composed with row-wise projections/
-    filters qualify).  ``keys[i]`` gives source i's unique row key as
-    it survives into the destination (list, or {source: dest} when
-    combine renames) — required for incrementality; without it every
-    non-noop run takes the honest full fallback.  A keep-best dedup
-    OVER the combine is supported through ``dedup_keys``/``dedup_order``/
-    ``dedup_side`` (round 11 — see ``__init__``); other cross-row
-    state (aggregations) still belongs to ContinuousAggregate.
-
-    Identity (all multisets; S_i = A_i − ∇_i is source i's surviving
-    old rows, A_i' = S_i + Δ_i its new state): after retracting
-    keys(∇_i) for every i the destination holds combine(S_1..S_n),
-    and the TELESCOPING sum
-
-        combine(A_1'..A_n') = combine(S_1..S_n)
-            + Σ_i combine(A_1'.., A_{i-1}', Δ_i, S_{i+1},.., S_n)
-
-    (term i switches argument i from S_i to A_i' under
-    multilinearity) makes each run N delta-joins — every term has a
-    version-diff-sized argument to broadcast — instead of one full
-    N-way recompute.  Deletes+inserts land as ONE atomic
-    :meth:`~.manifest.ManifestTable.merge_delta` commit carrying all
-    N txn watermarks."""
+class MultiJoinPropagator(_Propagation):
+    """N ≥ 2 sources: ``combine(dfs: list[DataFrame])`` must be
+    multilinear; ``keys[i]`` is source i's provenance key (see the
+    engine's key rule — ``None`` leaves every source without one);
+    ``dedup_side`` is the INDEX of the source owning ``dedup_keys``."""
 
     def __init__(
         self,
@@ -614,207 +402,18 @@ class MultiJoinPropagator:
         dest: ManifestTable,
         combine: Callable[[list[DataFrame]], DataFrame],
         app_id: str = "propagateN",
-        keys: list[list[str] | dict[str, str]] | None = None,
-        dedup_keys: list[str] | dict[str, str] | None = None,
+        keys: list[KeySpec] | None = None,
+        dedup_keys: KeySpec | None = None,
         dedup_order: list[str] | None = None,
         dedup_side: int = -1,
     ) -> None:
-        """``dedup_keys`` + ``dedup_order`` + ``dedup_side`` (round 11
-        — closing SURVEY §8j's residual): the destination becomes the
-        deterministic keep-best per key over the (still multilinear)
-        combine, exactly the 2-source semantics of
-        :class:`DeltaJoinPropagator`.  ``dedup_side`` is the INDEX of
-        the source that owns the dedup keys; ``dedup_keys`` is the
-        {source: dest} spec read against that source.  Every
-        incremental run re-derives the AFFECTED keys (dedup-side
-        deletes directly, other sides' deletes via the winners they
-        produced, telescoping delta terms for new candidates) from a
-        combine whose owning source is filtered to those keys."""
         if len(sources) < 2:
             raise ValueError("MultiJoinPropagator needs >= 2 sources")
-        if keys is not None and len(keys) != len(sources):
-            raise ValueError("one key spec per source")
-        self.sources = list(sources)
-        self.dest = dest
-        self.combine = combine
-        self.app_id = app_id
-        self.keys = keys
-        if (dedup_keys is None) != (dedup_order is None):
-            raise ValueError("dedup_keys and dedup_order go together")
-        if dedup_keys is not None and not (
-            0 <= dedup_side < len(sources)
-        ):
-            raise ValueError("dedup_side must index a source")
-        self.dedup_pairs = (
-            _key_pairs(dedup_keys) if dedup_keys is not None else None
+        super().__init__(
+            sources, dest, lambda *dfs: combine(list(dfs)), app_id,
+            keys if keys is not None else [None] * len(sources),
+            dedup_keys, dedup_order, dedup_side,
         )
-        self.dedup_keys = (
-            [d for _, d in self.dedup_pairs]
-            if self.dedup_pairs is not None
-            else None
-        )
-        self.dedup_order = list(dedup_order) if dedup_order else None
-        self.dedup_side = dedup_side
-
-    def _best(self, df: DataFrame) -> DataFrame:
-        if self.dedup_keys is None:
-            return df
-        return _best_per_key(df, self.dedup_keys, self.dedup_order)
-
-    def reflected_versions(self) -> tuple[int, ...]:
-        txn = self.dest.manifest().get("txn", {})
-        return tuple(
-            int(txn.get(f"{self.app_id}.s{i}", 0))
-            for i in range(len(self.sources))
-        )
-
-    def run_once(self, spark: SparkSession) -> dict:
-        olds = self.reflected_versions()
-        news = tuple(s.current_version() for s in self.sources)
-        meta = {"versions": list(news)}
-        if news == olds or any(v == 0 for v in news):
-            return {"mode": "noop", **meta}
-        txns = [
-            (f"{self.app_id}.s{i}", news[i])
-            for i in range(len(self.sources))
-        ]
-        if all(olds) and self.keys is not None:
-            changes = [
-                s.read_changes(spark, lo, hi)
-                for s, lo, hi in zip(self.sources, olds, news)
-            ]
-            if all(ch is not None for ch in changes):
-                from pyspark.sql import functions as F
-
-                n = len(self.sources)
-                pairs = [_key_pairs(k) for k in self.keys]
-                adds = [ch[0] for ch in changes]
-                dels = [ch[1] for ch in changes]
-                surviving = [
-                    self.sources[i]
-                    .read(spark, version=olds[i])
-                    .join(
-                        dels[i]
-                        .select(*[s for s, _ in pairs[i]])
-                        .dropDuplicates([s for s, _ in pairs[i]]),
-                        [s for s, _ in pairs[i]],
-                        "left_anti",
-                    )
-                    for i in range(n)
-                ]
-                new_full = [
-                    self.sources[i].read(spark, version=news[i])
-                    for i in range(n)
-                ]
-                inserts = None
-                for i in range(n):
-                    term = self.combine(
-                        new_full[:i] + [adds[i]] + surviving[i + 1 :]
-                    )
-                    inserts = (
-                        term
-                        if inserts is None
-                        else inserts.unionByName(term)
-                    )
-                if self.dedup_keys is not None:
-                    res = self._merge_dedup(
-                        spark, dels, pairs, inserts, new_full, txns
-                    )
-                    if res is not None:
-                        return {**res, **meta}
-                    # dedup prechecks failed: the plain keyed path
-                    # would be WRONG under keep-best semantics — the
-                    # honest full fallback below re-derives everything
-                else:
-                    deletes = [
-                        (
-                            [d for _, d in pairs[i]],
-                            dels[i].select(
-                                *[F.col(s).alias(d) for s, d in pairs[i]]
-                            ),
-                        )
-                        for i in range(n)
-                    ]
-                    self.dest.merge_delta(
-                        spark, inserts, deletes, txn=txns
-                    )
-                    return {
-                        "mode": "incremental",
-                        "retractions": True,
-                        **meta,
-                    }
-        out = self._best(
-            self.combine(
-                [
-                    self.sources[i].read(spark, version=news[i])
-                    for i in range(len(self.sources))
-                ]
-            )
-        )
-        self.dest.replace(out, txn=txns)
-        return {"mode": "full", **meta}
-
-    def _merge_dedup(
-        self, spark, dels, pairs, cand, new_full, txns
-    ) -> dict | None:
-        """Keep-best CDC step, N-source form of
-        :meth:`DeltaJoinPropagator._run_cdc_dedup`: affected keys from
-        (1) the owning side's deletes directly, (2) every other side's
-        deletes via the stored winners they produced, (3) the
-        telescoping delta terms' candidates; re-derive them from a
-        combine whose owning source is filtered to those keys.  None
-        (→ full fallback) when a non-owning side's provenance is
-        invisible in the destination or the dedup spec names columns
-        absent from the owning side's delete rows."""
-        from pyspark.sql import functions as F
-
-        n = len(self.sources)
-        side = self.dedup_side
-        dp = self.dedup_pairs
-        dest_cur = self.dest.read(spark)
-        dcols = set(dest_cur.columns)
-        for i in range(n):
-            if i != side and not {d for _, d in pairs[i]} <= dcols:
-                return None
-        if not {s for s, _ in dp} <= set(dels[side].columns):
-            return None
-        affected = dels[side].select(
-            *[F.col(s).alias(d) for s, d in dp]
-        )
-        for i in range(n):
-            if i == side:
-                continue
-            ikeys = dels[i].select(
-                *[F.col(s).alias(d) for s, d in pairs[i]]
-            ).dropDuplicates([d for _, d in pairs[i]])
-            affected = affected.unionByName(
-                dest_cur.join(
-                    ikeys, [d for _, d in pairs[i]], "left_semi"
-                ).select(*self.dedup_keys)
-            )
-        # affected feeds BOTH the retraction key set and (via src_keys)
-        # the re-derivation semi-join — persist so the N telescoping
-        # delta terms behind cand compute once
-        affected = (
-            affected.unionByName(cand.select(*self.dedup_keys))
-            .dropDuplicates(self.dedup_keys)
-            .persist()
-        )
-        try:
-            src_keys = affected.select(
-                *[F.col(d).alias(s) for s, d in dp]
-            )
-            args = list(new_full)
-            args[side] = new_full[side].join(
-                src_keys, [s for s, _ in dp], "left_semi"
-            )
-            refreshed = self._best(self.combine(args))
-            self.dest.merge_delta(
-                spark, refreshed, [(self.dedup_keys, affected)], txn=txns
-            )
-        finally:
-            affected.unpersist()
-        return {"mode": "incremental", "retractions": True, "dedup": True}
 
 
 def make_medallion_sink(

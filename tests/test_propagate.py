@@ -599,6 +599,38 @@ def test_three_source_deletes_on_every_source(spark, sf_dir, tmp_path):
     assert p.run_once(spark)["mode"] == "noop"
 
 
+def test_three_source_keyless_append_only_incremental(
+    spark, sf_dir, tmp_path
+):
+    """Append-only ranges need no provenance keys: a keyless 3-way
+    fan-in runs the delta terms incrementally, and the destination
+    equals the one-shot 3-way join."""
+    s_ev = ManifestTable(str(tmp_path / "ev"))
+    s_us = ManifestTable(str(tmp_path / "us"))
+    s_ty = ManifestTable(str(tmp_path / "ty"))
+    dest = ManifestTable(str(tmp_path / "gold"))
+    p = MultiJoinPropagator([s_ev, s_us, s_ty], dest, combine=_join3)
+    s_ev.append(_events(spark, sf_dir, 0, 200))
+    s_us.append(_users(spark, sf_dir, 0, 60))
+    s_ty.append(_typedim(spark, sf_dir))
+    assert p.run_once(spark)["mode"] == "full"
+    s_ev.append(_events(spark, sf_dir, 200, 300))
+    s_us.append(_users(spark, sf_dir, 60, 90))
+    r = p.run_once(spark)
+    assert r["mode"] == "incremental", r
+    assert r["versions"] == [2, 2, 1]
+    want = _join3(
+        [
+            _events(spark, sf_dir, 0, 300),
+            _users(spark, sf_dir, 0, 90),
+            _typedim(spark, sf_dir),
+        ]
+    )
+    assert _ids(dest.read(spark)) == _ids(want)
+    assert dest.read(spark).count() == want.count()
+    assert p.run_once(spark)["mode"] == "noop"
+
+
 def test_multi_source_fallbacks_and_validation(spark, sf_dir, tmp_path):
     s_ev = ManifestTable(str(tmp_path / "ev"))
     s_us = ManifestTable(str(tmp_path / "us"))
@@ -612,6 +644,20 @@ def test_multi_source_fallbacks_and_validation(spark, sf_dir, tmp_path):
     with pytest.raises(ValueError):
         MultiJoinPropagator(
             [s_ev, s_us], dest, combine=j2, keys=[["event_id"]]
+        )
+    # an empty keep-best spec fails at construction, not on first run
+    with pytest.raises(ValueError):
+        IncrementalPropagator(
+            s_ev, dest, _clicks_x10, dedup_keys=["event_id"], dedup_order=[]
+        )
+    with pytest.raises(ValueError):
+        IncrementalPropagator(
+            s_ev, dest, _clicks_x10, dedup_keys=[], dedup_order=["value"]
+        )
+    with pytest.raises(ValueError):
+        MultiJoinPropagator(
+            [s_ev, s_us], dest, combine=j2,
+            dedup_keys={}, dedup_order=["value"], dedup_side=0,
         )
     p = MultiJoinPropagator([s_ev, s_us], dest, combine=j2)  # no keys
     s_ev.append(_events(spark, sf_dir, 0, 100))
